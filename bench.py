@@ -1,8 +1,8 @@
-"""Benchmark harness.
+"""Headline benchmark: ``python bench.py``.
 
-Default mode: runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+Runs the headline queries over the parquet scale-factor directory
+``$SPARK_GRAFT_SF_DIR`` (default: sf0.1) on ``local[$SPARK_GRAFT_CPUS]``
+(default: the CPUs this process may run on) and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -12,26 +12,21 @@ row generation, so the measurement is dominated by the pipeline, not the
 generator). ``rows_per_sec`` (parsed+routed lines/sec — the BASELINE.json
 metric) is included as an extra key.
 
-Scaling mode (north rule: ≥0.8 efficiency from N to 4N executors)::
-
-    python bench.py --scaling   # runs the SAME job at local[8] and
-                                # local[32] in fresh JVMs, writes
-                                # BENCH/BASELINE.md
+Per-layer attribution, steadiness and the gated end-to-end metrics live
+in ``perfbench/`` (``python3 perfbench/run.py --workload flagship_agg``).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # pages per unit scale factor for the synthetic throughput leg;
 # sf0.1 -> 60k pages (~1.9M lines), override with SPARK_GRAFT_BENCH_PAGES
 PAGES_PER_SF = 600_000
@@ -44,7 +39,7 @@ def _sf_of(path: str) -> float:
     return float(m.group(1)) if m else 0.0
 
 
-def make_spark(cpus: int, memory: str = "48g"):
+def make_spark(cpus: int):
     from pyspark.sql import SparkSession
 
     return (
@@ -59,14 +54,13 @@ def make_spark(cpus: int, memory: str = "48g"):
         # thrash each other 7x on string/GC-heavy stages (measured).
         .config("spark.driver.extraJavaOptions",
                 f"-XX:ActiveProcessorCount={cpus}")
-        .config("spark.driver.memory", memory)
+        # leaves room for the Python workers on a ~16 GB host
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 65536 sits on the single-JVM plateau (sweep in BASELINE.md);
-        # co-resident JVMs (executor-model bench) override it larger via
-        # env — fewer Arrow socket handoffs = less shared-kernel churn.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"))
+        # 65536 sat on the plateau of the Arrow batch-size sweep
+        # (BENCH/BASELINE.md)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
@@ -156,8 +150,7 @@ def run_bench() -> dict:
     qtimes["e2e_pipeline"] = round(dt, 3)
 
     # steady-state throughput: a long job (38M lines) amortizing the
-    # constant driver work that dominates the short sf-scaled run —
-    # directly comparable to BENCH/BASELINE.md's scaling-table numbers
+    # constant driver work that dominates the short sf-scaled run
     steady_best = None
     for _ in range(3):
         s_lines, s_dt, _ = pipeline_throughput(spark, 1_200_000, CPUS * 8)
@@ -182,1234 +175,5 @@ def run_bench() -> dict:
     return result
 
 
-def _control_work(args):
-    cpu, cpus = args
-    import re as _re
-
-    if cpus:  # cpus=0 -> unpinned (the executor-model control)
-        try:
-            os.sched_setaffinity(0, {cpu % cpus})
-        except (AttributeError, OSError):
-            pass
-    pat = _re.compile(r"^([0-9]+) +([0-9]+) +(\S+) +:(\.)\.*([^:]*):(.*)$")
-    line = ("0322 085338 TRACE  :......router_forward_getOI:         "
-            "source address:   9.67.116.98")
-    for _ in range(1_000_000):
-        pat.match(line)
-
-
-def _host_control(cpus: int) -> float:
-    """Embarrassingly-parallel CPU-bound control (C-regex over a corpus
-    line) pinned to ``cpus`` cores: measures the HOST's own scaling
-    ceiling (virtualized frequency/steal effects), independent of Spark.
-    Returns work-items/sec."""
-    import multiprocessing as mp
-
-    n_items = cpus * 2  # fixed work per core ratio
-    t0 = time.time()
-    with mp.Pool(cpus) as p:
-        p.map(_control_work, [(i, cpus) for i in range(n_items)])
-    return n_items / (time.time() - t0)
-
-
-def _scaling_once(levels) -> list[dict]:
-    # pin only when a level would otherwise borrow beyond its core share:
-    # local[N] uses up to 2N cores (N task threads + N python workers),
-    # so when 2*hi fits the host, both levels run unpinned and fair —
-    # avoiding the measured Arrow-socket handoff penalty of hard pinning.
-    ncores = os.cpu_count() or 32
-    pin = "1" if 2 * max(levels) > ncores else "0"
-    out = []
-    for cpus in levels:
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-                   SPARK_GRAFT_PIN=pin)
-        # steady-state job length: ~76M lines. Short jobs (<15s on the
-        # fast leg) under-amortize constant driver work (plan, broadcast
-        # builds) and understate scaling by 15-20%; real cluster jobs
-        # run for hours, so the long job is the honest proxy. (Doubled
-        # in round 3: the capture-free kernel made the 16-core leg a
-        # 10-second job at the old size.)
-        env.setdefault("SPARK_GRAFT_BENCH_PAGES", "2400000")
-        try:
-            # hard cap per level: a degraded host window can deadlock a
-            # Spark job outright (observed: one leg hung >1h at zero
-            # load); a timed-out leg poisons the attempt, and the retry
-            # loop / keep-best state absorb it.
-            p = subprocess.run(
-                [sys.executable, __file__, "--single-throughput"],
-                env=env,
-                capture_output=True,
-                text=True,
-                timeout=900,
-            )
-        except subprocess.TimeoutExpired:
-            # sec=None, not float('inf'): json.dump would emit the
-            # non-standard token `Infinity`, which strict JSON parsers
-            # reject if a poisoned attempt ever gets persisted.
-            return [
-                {"cpus": c, "lines": 0, "sec": None, "timed_out": True,
-                 "rows_per_sec": 0, "sink_counts": {}, "pinned": pin == "1",
-                 "host_control_ips": 0}
-                for c in levels
-            ]
-        line = [l for l in p.stdout.splitlines() if l.startswith("{")][-1]
-        r = json.loads(line)
-        r["pinned"] = pin == "1"
-        r["host_control_ips"] = round(_host_control(cpus), 1)
-        out.append(r)
-    return out
-
-
-def run_scaling(levels=(8, 32), max_attempts=3) -> list[dict]:
-    """Run the synthetic pipeline at two parallelism levels in fresh JVMs
-    (the sandbox proxy for N vs 4N executors).
-
-    The sandbox host suffers intermittent CPU steal (the pure-CPU control
-    itself has measured anywhere between 0.5 and 0.95 scaling efficiency
-    across windows), and a clean control does NOT guarantee the Spark
-    window was clean (hypervisor steal arrives in bursts). Retry until
-    the JOB efficiency clears the 0.8 bar or attempts run out.
-
-    Attempt selection is gated on the INDEPENDENT host control, not on
-    the reported metric alone (selecting the max of a noisy ratio keyed
-    on itself would bias the record upward by favoring windows where the
-    low-core leg happened to run slow): the best attempt is chosen among
-    those whose same-window pure-CPU control scaled cleanly (host_eff >=
-    0.75), falling back to the overall best only if no attempt had a
-    clean control. Every attempt's job/host efficiency is recorded on
-    the result (attempt_effs / attempt_host_effs / median_attempt_eff)
-    so the report always shows the selection spread."""
-    ratio = levels[-1] / levels[0]
-    attempts = []
-    for _ in range(max_attempts):
-        out = _scaling_once(levels)
-        eff = (
-            out[-1]["rows_per_sec"] / max(out[0]["rows_per_sec"], 1)
-        ) / ratio
-        lo_ips = out[0].get("host_control_ips") or 0
-        hi_ips = out[-1].get("host_control_ips") or 0
-        host_eff = (hi_ips / lo_ips) / ratio if lo_ips and hi_ips else 0.0
-        attempts.append((eff, host_eff, out))
-        if eff >= 0.8 and host_eff >= 0.75:
-            break
-    effs = sorted(a[0] for a in attempts)
-    mid = len(effs) // 2
-    median_eff = (
-        effs[mid] if len(effs) % 2 else (effs[mid - 1] + effs[mid]) / 2
-    )
-    clean = [a for a in attempts if a[1] >= 0.75]
-    best = max(clean or attempts, key=lambda a: a[0])
-    best[2][-1]["attempt_effs"] = [round(a[0], 3) for a in attempts]
-    best[2][-1]["attempt_host_effs"] = [round(a[1], 3) for a in attempts]
-    best[2][-1]["median_attempt_eff"] = round(median_eff, 3)
-    best[2][-1]["control_gated"] = bool(clean)
-    return best[2]
-
-
-def single_throughput() -> dict:
-    # Pin the whole process tree (JVM + python workers) to exactly CPUS
-    # cores: local[N] otherwise uses up to 2N cores (N task threads + N
-    # python workers), which would flatter the small-N run and corrupt the
-    # N-vs-4N efficiency. Inherited by all children. SPARK_GRAFT_PIN=0
-    # disables it for level pairs that already fit the host unpinned
-    # (e.g. 4 vs 16 on a 32-core host: 2N threads <= cores at BOTH
-    # levels, so neither run borrows beyond its share and pinning's
-    # known Arrow-socket handoff penalty is avoided).
-    if os.environ.get("SPARK_GRAFT_PIN", "1") != "0":
-        try:
-            os.sched_setaffinity(0, set(range(CPUS)))
-        except (AttributeError, OSError):
-            pass
-    spark = make_spark(CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", PAGES_PER_SF))
-    pipeline_throughput(spark, max(n_pages // 10, 1000), CPUS)
-    best = None
-    # the sandbox host shows ~3x run-to-run variance on identical jobs
-    # (virtualized, noisy neighbors) -> best-of-3 fresh plans
-    for _ in range(3):
-        lines, dt, sink_counts = pipeline_throughput(spark, n_pages, CPUS * 8)
-        if best is None or dt < best[1]:
-            best = (lines, dt, sink_counts)
-    lines, dt, sink_counts = best
-    spark.stop()
-    return {
-        "cpus": CPUS,
-        "lines": lines,
-        "sec": round(dt, 3),
-        "rows_per_sec": int(lines / dt),
-        "sink_counts": sink_counts,
-    }
-
-
-def run_steady_probe() -> dict:
-    """One steady-leg measurement bracketed by same-window host
-    controls, appended to BENCH/state.json["steady_log"] — the
-    reconciliation ledger for the r03→r04 ``rows_per_sec_steady`` swing
-    (3.79M → 2.78M rows/s on an unchanged kernel): each probe records
-    the engine's steady throughput NEXT TO the host's cache-resident
-    and memory-STREAMING capacity sampled immediately before and after,
-    so a swing is attributable (engine regression moves only the engine
-    number; a degraded host window moves the streaming control with
-    it — the documented failure mode of this box, trap #13)."""
-    import time as _t
-
-    ctl_pre = _host_control(CPUS)
-    stream_pre = _host_control_stream(CPUS)
-    spark = make_spark(CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
-    pipeline_throughput(spark, 2000, CPUS)  # warm workers/JIT
-    best = None
-    for _ in range(3):
-        s_lines, s_dt, _ = pipeline_throughput(spark, 1_200_000, CPUS * 8)
-        if best is None or s_dt < best[1]:
-            best = (s_lines, s_dt)
-    spark.stop()
-    ctl_post = _host_control(CPUS)
-    stream_post = _host_control_stream(CPUS)
-    rec = {
-        "t": int(_t.time()),
-        "rows_per_sec_steady": int(best[0] / best[1]),
-        "steady_sec": round(best[1], 3),
-        "steady_lines": best[0],
-        "cpus": CPUS,
-        "host_regex_ips": [round(ctl_pre, 1), round(ctl_post, 1)],
-        "host_stream_ips": [round(stream_pre, 2), round(stream_post, 2)],
-    }
-    state = _load_state()
-    state.setdefault("steady_log", []).append(rec)
-    _save_state(state)
-    return rec
-
-
-INTERPRETATION_MD = """\n## Round-5 scaling-evidence change (long-job configs + steady ledger)
-
-Round 5 adds two things to the evidence, both measurement methodology
-rather than engine changes:
-
-1. **Long-job config lines (2cpL / 4cpL)** — identical geometry to the
-   pre-registered short-job configs but 3-4x the input. Motivation: the
-   best recorded 4cp draw (0.829) sits almost exactly at the SHORT-JOB
-   ceiling — with ~2s of per-job serial time (plan build, broadcast dim
-   construction, python-worker spin-up) over a 12.4s fast leg, a
-   PERFECT host reads (W+c)/(W/4+4c)-style ≈ 0.87, so short-job draws
-   can never evidence 0.9+ no matter how clean the window. The L lines
-   put the fast leg above 25s (trap #6's documented threshold) so the
-   serial constant stops dominating; they ledger under their own cfg
-   tags because pooling them with the short-job configs would
-   retroactively redefine those pre-registered pools. The short-job
-   lines keep accumulating unchanged.
-
-2. **The steady-probe ledger** (section above) — every steady
-   measurement now carries bracketing host controls, which is what the
-   round-4 flag on the 3.79M→2.78M steady swing needed: the table
-   separates "the engine got slower" from "the window degraded
-   mid-run" using the streaming control's pre/post pair, with zero
-   judgment calls.
-
-The 2cp pre-registered target from round 4 (median ≥ 0.8 over ≥ 15
-clean attempts) is reported exactly as measured in the secondary-line
-section above, hit or miss. Round-5 outcome in one paragraph: the
-short-job 2cp pool reached 23 AB-clean attempts with median 0.605
-(best 0.894) — the ≥ 15-attempt bar was met, the 0.8 median was not,
-consistent with the ~0.87 structural ceiling short jobs carry. The
-2cpL long-job line — same geometry, 3x the input, the two known
-single-box confounds (bandwidth wall, serial constant) both
-controlled — posted an **AB-clean median of 0.811 over 9 attempts**
-(draws 0.563–1.068, best dual-clean 0.898): the first config to clear
-the north rule's 0.8 bar on a clean MEDIAN rather than a best draw.
-The 4-core pools (4cp 0.382/7, 4cpL 0.509/3) remain below the bar and
-are retained as the measurement of the wall itself. Everything below
-this section is the round-3/4 context it builds on.
-
-## Round-4 scaling-evidence change (median headline)
-
-Round 4 changes what the executor-model section LEADS with, per the
-round-3 review: every attempt (clean or not) now lands in a round-long
-log, and the headline is the MEDIAN over attempts whose BOTH
-same-window controls were healthy (pure-CPU control A ≥ 0.75 and the
-resource-matched memory-streaming control B ≥ 0.9 — B collapsing
-means the window itself was bandwidth-degraded with zero Spark
-involved). The keep-best table is explicitly demoted to "optimistic
-bound". Round-4 attempts include a dual-clean **0.829** draw (host A
-1.012, stream B 1.159) — the first time the 1-vs-4-JVM proxy cleared
-the 0.8 bar with both controls clean in the same window; the
-attribution argument from round 3 below still explains why the
-MEDIAN sits under the bar on this single box while the in-JVM 4→16
-pair and control-attributed numbers clear it.
-
-Disclosure: six round-4 attempts (two three-attempt invocations,
-~08:55-09:15 on 2026-08-18) ran while a SECOND benchmark process
-overlapped on the host (a builder scheduling error — two background
-scaling jobs wrote the same slot). Their windows carry self-inflicted
-contention a real cluster would not have; two of them passed the
-control gate anyway (0.373, 0.571) and are KEPT in the median — the
-gate is mechanical and removing identified-bad-luck draws by hand
-would be cherry-picking. Later serialized attempts dilute them.
-
-## Round-3 kernel change (capture-free split plan)
-
-The parse kernel no longer pays RE2's capture engine on the hot path:
-profiling showed `pc.extract_regex` at 77% of kernel time, and a
-microbenchmark (2M corpus lines, 1 core) localized it to capture
-MATERIALIZATION — `match_substring_regex` (RE2's DFA) runs 7.1M rows/s
-where `extract_regex` runs 0.89M, and deleting 6 of 8 capture groups
-only recovers 12%, so the cost is the capture engine itself, not the
-group count. `operators/fastsplit.py` therefore gates every line with
-the DFA and decomposes only matched rows with split/trim kernels
-(split on the anchor char, ascii whitespace split, ltrim), with cheap
-alignment checks routing ambiguous rows to the exact walker.
-Measured (48M in-RAM lines, local[32], same window, identical filter
-counts): **9.86M rows/s with the plan vs 7.93M without (+24% e2e)**;
-the single-core kernel A/B reads +46% (0.86M vs 0.59M rows/s
-including walker fallback). Candidates measured and REJECTED this
-round: two-pass match-gate+extract (0.77M vs 0.89M — the gate only
-pays when match rates are low) and per-group capture pruning (+8-13%).
-The round-2 samework record of 5.91M lines/s now reads 9.86M.
-
-## Round-3 executor-model attribution (why 1-vs-4-JVM reads low here)
-
-The executor-model proxy stayed below the 0.8 bar in every round-3
-window (attempts 0.07-0.28; keep-best record 0.596 from round 2). The
-cause was isolated with a zero-Spark experiment: running the engine's
-OWN Arrow parse kernel as N independent python processes (no JVM, no
-sockets, no shuffle — just pyarrow over in-RAM strings), identical
-tasks took 2.2s each at 8 concurrent processes and 19.6s each at 32 in
-one window; aggregate throughput at 32 processes measured BELOW the
-8-process aggregate. Meanwhile the cache-resident pure-CPU regex
-control scaled at 0.92-1.08 in the same windows. Conclusion: this
-single virtualized box cannot FEED 32 cores of string-streaming work
-(memory bandwidth / hypervisor memory behavior), which no software
-change can affect — the bench now runs BOTH controls in the same
-window as the Spark legs (control A: cache-resident CPU; control B:
-the kernel itself, resource-matched) and reports host-attributed
-software efficiency. A real multi-executor cluster adds memory
-controllers with every node, so the wall this proxy hits does not
-exist between executors there; the in-JVM 4→16 pair (which fits the
-box's bandwidth at both levels) is the scaling evidence that transfers.
-
-## Interpretation (round 2)
-
-- **The ≥0.8 bar is met**: the 4→16-core pair (both levels unpinned and
-  un-oversubscribed — 2N threads fit the 32-core host at both levels, so
-  the comparison is fair without pinning's Arrow-socket penalty)
-  measured **0.836 raw** on a 38M-line steady-state job with the host
-  control in the same window at ~1.0 and per-sink counts bit-identical.
-  The pinned 8→32 pair measured 0.712 raw in the same window (up from
-  0.452 in round 1) — that pair's 32-core leg runs 64 threads on 32
-  cores (N task threads + N python workers), so part of the residual is
-  oversubscription the real cluster doesn't have.
-- Throughput (round 2, clean window): **3.9M parsed+routed lines/sec on
-  local[32]** end-to-end (source → explode → Arrow parse → 3 broadcast
-  joins → 7 sink predicates → aggregate), ~1.4M on a pinned 8-core
-  executor. Round 1 recorded 1.98M at local[32]; the gain is (a) the
-  arrow_udf parse strategy — only the line column crosses into Python
-  and only the parsed struct returns, +37% e2e over mapInArrow
-  (2.87M vs 2.10M in a controlled A/B) — and (b) a longer
-  steady-state job that amortizes constant driver work.
-- Arrow batch-size sweep (tools/samework_bench.py --sweep, 12M lines,
-  local[32]): 32768 → 5.54M, 65536 → 5.91M, 131072 → 5.93M,
-  262144 → 5.91M rows/s. The default 65536 sits on the plateau; batch
-  size is not a lever worth tuning further.
-- Strategy trade (measured both rounds): co-resident local JVMs under
-  host contention degrade arrow_udf's ArrowEvalPython ~3x while
-  mapInArrow degrades ~1.5x, so the executor-model bench pins
-  strategy="mapinarrow"; single-JVM (and real clusters, where executors
-  do not share a kernel) default to arrow_udf
-  (env SPARK_GRAFT_PARSE_STRATEGY overrides).
-- The concurrent multi-JVM executor proxy remains kernel-bound on this
-  VM (any multi-process load shows 24-75%% system CPU; identical runs
-  vary 5-10x across windows) — its 0.28 is a lower bound with the
-  sys-CPU diagnostic attached; on a real multi-node cluster each
-  executor owns its kernel and none of that contention exists.
-- The plan itself carries the shapes that scale: no shuffle of the fact
-  side (broadcast joins only), exactly one Python stage per pipeline,
-  map-side partial aggregation, per-page projections pushed above the
-  30x line fan-out, and salting/AQE for the Zipf host skew.
-- Required configs for multi-executor co-residency discovered here and
-  baked into bench.py: `-XX:ActiveProcessorCount=<executor cores>` and a
-  non-purging Arrow allocator (`ARROW_DEFAULT_MEMORY_POOL=system`).
-
-## Reference single-node comparison (measured, not guessed)
-
-The reference publishes no numbers, so we measured it: a micro-harness
-(`tools/refbench/`) links the reference's parser + filter translation
-units unmodified and drives the exact per-line scan work
-(`ProcessedLine` construction + `LineFilter::passes`,
-filtered_file_reader.cpp:236-270) over the golden corpus in RAM. The
-Spark side of the identical workload is `tools/samework_bench.py`.
-
-| engine | workload | rate |
-|---|---|---|
-| reference (C++17, 1 thread) | parse + `Level EQ INFO` filter, in-RAM lines | **3.78M lines/s** |
-| this repo (local[32], cached lines) | identical workload (parse + same filter + count), best-of-5 | **5.91M lines/s** |
-| this repo (local[32]) | full pipeline: source → explode → parse → 3 broadcast joins → 7 sinks → aggregates | 3.9M lines/s |
-
-Round 2 read: the 32-core node now beats the reference's single-thread
-hot loop 1.56x on the identical microbenchmark (round 1's 2.49M was
-measured in a degraded host window; the kernel also gained the
-arrow_udf transfer cut). Per-core the Arrow/Python kernel remains ~5x
-slower than native C++ (~0.75M RE2-bound rows/s/core single-threaded vs
-3.8M) — profiling shows 77%% of kernel time is pyarrow's RE2
-`extract_regex` itself, so the remaining per-core gap needs an
-RE2-class engine with cheaper capture materialization, not a plan
-change. Two alternatives were built and measured SLOWER: the JVM-codegen
-extract path (parse_lines_hybrid, 1.69M vs 2.17M rows/s — java.util.regex
-backtracks at ~0.5M matches/s/core vs RE2's ~1M) and running the
-vectorized NumPy walker on full batches (0.1M rows/s — its class-stop
-index arrays blow up to ~1GB on multi-MB buffers; it stays
-residual-only). What the comparison can't show: the reference is
-single-threaded and in-RAM only (its own README caps it at "GB-scale
-files"), with no joins, no aggregates, no multi-sink routing, no
-resume, and no path past one machine; this engine runs the full
-pipeline and scales horizontally.
-"""
-
-BENCH_STATE = "BENCH/state.json"
-
-
-def _load_state() -> dict:
-    try:
-        with open(BENCH_STATE) as f:
-            return json.load(f)
-    except (FileNotFoundError, ValueError):
-        return {}
-
-
-def _save_state(state: dict) -> None:
-    os.makedirs("BENCH", exist_ok=True)
-    with open(BENCH_STATE, "w") as f:
-        json.dump(state, f, indent=1)
-
-
-def write_scaling_report(results: list[dict]) -> str:
-    """Keep-best across invocations, PER LEVEL PAIR: the sandbox host
-    swings 5-10x, so a later run in a dirty window must not downgrade the
-    recorded number. State lives in BENCH/state.json; BASELINE.md is
-    re-rendered whole."""
-    lo, hi = results[0], results[-1]
-    ratio = hi["cpus"] / lo["cpus"]
-    eff = (hi["rows_per_sec"] / max(lo["rows_per_sec"], 1)) / ratio
-    state = _load_state()
-    # migrate the legacy single-slot key to the per-pair scheme
-    if "scaling" in state and "scaling_8_32" not in state:
-        state["scaling_8_32"] = state.pop("scaling")
-    key = f"scaling_{lo['cpus']}_{hi['cpus']}"
-    prev = state.get(key)
-    # eff_history accumulates EVERY invocation's efficiency (kept or
-    # not) so the keep-best record always shows its selection spread
-    # next to the retained maximum.
-    hist = list((prev or {}).get("eff_history", []))
-    hist.append(round(eff, 3))
-    if prev is None or eff > prev.get("efficiency", -1):
-        state[key] = {"results": results, "efficiency": round(eff, 3)}
-    state[key]["eff_history"] = hist
-    _save_state(state)
-    _render_baseline_md(state)
-    return "BENCH/BASELINE.md"
-
-
-def _render_scaling_section(f, results: list[dict],
-                            eff_history=None) -> None:
-    lo, hi = results[0], results[-1]
-    ratio = hi["cpus"] / lo["cpus"]
-    eff = (hi["rows_per_sec"] / max(lo["rows_per_sec"], 1)) / ratio
-    if True:
-        pinned = lo.get("pinned", True)
-        pin_txt = (
-            "with each process tree CPU-pinned to exactly its core "
-            "count via sched_setaffinity (local[N] otherwise uses up to "
-            "2N cores: N task threads + N python workers)"
-            if pinned else
-            "UNPINNED — at these levels 2N threads (N task threads + N "
-            "python workers) fit the host at BOTH levels, so neither run "
-            "borrows beyond its share and the comparison is fair without "
-            "pinning's Arrow-socket handoff penalty"
-        )
-        f.write(
-            f"# Scaling bench — parsed+routed rows/sec, "
-            f"local[{lo['cpus']}] vs local[{hi['cpus']}]\n\n"
-            "Sandbox proxy for the north rule's N vs 4N executor criterion "
-            "(no real cluster here): the SAME synthetic pipeline job "
-            "(synth pages → explode → parse UDF → broadcast enrich → "
-            "7-sink route masks → aggregate) run in fresh local-mode JVMs "
-            f"at local[{lo['cpus']}] and local[{hi['cpus']}] on identical "
-            f"input, {pin_txt}. Best-of-3 per "
-            "level — the sandbox host shows ~3x run-to-run variance on "
-            "identical jobs, so treat the efficiency as a lower-bound "
-            "estimate with that error bar.\n\n"
-            "| parallelism | lines | sec | rows/sec |\n|---|---|---|---|\n"
-        )
-        for r in results:
-            f.write(
-                f"| local[{r['cpus']}] | {r['lines']} | {r['sec']} | "
-                f"{r['rows_per_sec']} |\n"
-            )
-        f.write(
-            f"\n**Scaling efficiency ({lo['cpus']}→{hi['cpus']} cores): "
-            f"{eff:.3f}** (target ≥ 0.8; efficiency = speedup / core "
-            f"ratio).\n"
-        )
-        # selection-spread disclosure: the recorded number is keep-best
-        # across noisy-host windows; show every attempt so the max is
-        # never mistaken for a typical draw.
-        if hi.get("attempt_effs"):
-            gate = (
-                "chosen among clean-host-control attempts"
-                if hi.get("control_gated")
-                else "NO attempt had a clean host control; overall best kept"
-            )
-            f.write(
-                f"\nWithin-run attempts (job eff): {hi['attempt_effs']}, "
-                f"host-control eff per attempt: "
-                f"{hi.get('attempt_host_effs')}, median "
-                f"{hi.get('median_attempt_eff')} — {gate}.\n"
-            )
-        if eff_history and len(eff_history) > 1:
-            med = sorted(eff_history)[len(eff_history) // 2]
-            f.write(
-                f"\nKeep-best history across invocations: {eff_history} "
-                f"(median {med}; the table above shows the best "
-                f"clean-window draw).\n"
-            )
-        if lo.get("host_control_ips") and hi.get("host_control_ips"):
-            host_eff = (hi["host_control_ips"] / lo["host_control_ips"]) / ratio
-            if host_eff >= 0.98:
-                f.write(
-                    f"\nHost ceiling control (pure-CPU multiprocessing "
-                    f"regex, no Spark, same window): efficiency "
-                    f"{host_eff:.3f} over the same core ratio — the host "
-                    f"scaled cleanly, so the raw number above stands "
-                    f"un-attributed.\n"
-                )
-            else:
-                f.write(
-                    f"\nHost ceiling control (pure-CPU multiprocessing "
-                    f"regex, no Spark, same window): efficiency "
-                    f"{host_eff:.3f} over the same core ratio — the "
-                    f"virtualized host itself loses per-core throughput "
-                    f"under full load (frequency scaling / hypervisor / "
-                    f"oversubscription at 2N threads per N task slots). "
-                    f"Software-attributable efficiency = {eff:.3f} / "
-                    f"{host_eff:.3f} = {min(eff / host_eff, 1.0):.3f}.\n"
-                )
-        f.write(
-            f"\nPer-sink routed counts are identical at both "
-            f"levels (exact-count invariant): {hi['sink_counts']}\n"
-        )
-
-
-def _render_baseline_md(state: dict) -> None:
-    os.makedirs("BENCH", exist_ok=True)
-    if "scaling" in state and "scaling_8_32" not in state:
-        state["scaling_8_32"] = state.pop("scaling")
-    keys = sorted(
-        (k for k in state if k.startswith("scaling_")),
-        key=lambda k: -int(k.split("_")[2]),  # biggest pair first
-    )
-    with open("BENCH/BASELINE.md", "w") as f:
-        for k in keys:
-            _render_scaling_section(
-                f, state[k]["results"], state[k].get("eff_history")
-            )
-        if state.get("executors"):
-            _render_executor_section(f, state["executors"],
-                                     state.get("exec_attempt_log"))
-        last = state.get("executors_instr")
-        if last and last is not state.get("executors") and (
-            last.get("host_stream_eff") is not None
-        ):
-            f.write(
-                "\n### Best fully-instrumented attempt "
-                "(dual same-window controls)\n\n"
-                "The keep-best record above predates the dual-control "
-                "instrumentation; this is the best attempt with both "
-                "controls measured in the same window as its Spark "
-                "legs:\n\n"
-                f"- raw efficiency {last['efficiency']} "
-                f"(rows/s {last.get('rows_per_sec')}), "
-                f"sys-CPU {last.get('sys_cpu_frac_4way')}\n"
-                f"- control A (cache-resident CPU): "
-                f"{last.get('host_control_eff')} "
-                f"(items/s {last.get('host_control_ips')})\n"
-                f"- control B (memory-streaming, the kernel itself, no "
-                f"Spark): {last.get('host_stream_eff')} "
-                f"(tasks/s {last.get('host_stream_ips')})\n"
-                f"- attempts this run: {last.get('attempt_effs')} "
-                f"(host A per attempt {last.get('attempt_host_effs')}, "
-                f"median {last.get('median_attempt_eff')})\n"
-                f"- per-sink counts equal across sharding: "
-                f"{last.get('counts_equal')}\n"
-            )
-        _render_steady_section(f, state.get("steady_log") or [])
-        f.write(INTERPRETATION_MD)
-
-
-def _render_steady_section(f, log: list) -> None:
-    """The r03→r04 steady-throughput reconciliation ledger: every
-    ``--steady`` probe (best-of-3 on the 37.8M-line leg) next to the
-    host's cache-resident (regex) and memory-streaming (the kernel
-    itself, no Spark) capacity sampled immediately before and after.
-    The question the ledger answers: did the engine regress between
-    rounds, or did the measurement windows degrade? An engine
-    regression moves ONLY the engine number; a degraded window moves
-    the streaming control with it (this box's documented failure
-    mode)."""
-    if not log:
-        return
-    f.write(
-        "\n## Steady-state throughput ledger "
-        "(r03→r04 swing reconciliation)\n\n"
-        "BENCH_r03 recorded 3.79M rows/s steady; BENCH_r04 recorded "
-        "2.78M on an UNCHANGED parse kernel (round 4 was operator "
-        "additions; no fastsplit/walker diff). Each probe below is "
-        "best-of-3 on the same 37.8M-line leg, bracketed by "
-        "same-window host controls (pre → post):\n\n"
-        "| when | rows/s steady | host regex items/s | "
-        "host STREAM tasks/s |\n|---|---|---|---|\n"
-    )
-    for rec in log:
-        import datetime as _dt
-
-        ts = _dt.datetime.utcfromtimestamp(rec["t"]).strftime(
-            "%m-%d %H:%M")
-        f.write(
-            f"| {ts} | {rec['rows_per_sec_steady']:,} | "
-            f"{rec['host_regex_ips'][0]} → {rec['host_regex_ips'][1]} | "
-            f"{rec['host_stream_ips'][0]} → "
-            f"{rec['host_stream_ips'][1]} |\n"
-        )
-    best = max(log, key=lambda r: r["rows_per_sec_steady"])
-    f.write(
-        f"\nBest steady probe this round: "
-        f"**{best['rows_per_sec_steady']:,} rows/s**. Read the stream "
-        f"column first: a healthy window holds ~14+ tasks/s on both "
-        f"brackets; every probe whose stream control collapsed "
-        f"mid-run (e.g. 14.4 → 1.5) is a window artifact, not an "
-        f"engine number. The r03 3.79M was drawn in a clean window; "
-        f"any probe matching its window class that lands near it "
-        f"confirms no regression — the r04 2.78M came from a window "
-        f"this ledger would have excluded.\n"
-    )
-
-
-def _executor_shard(args):
-    """One 'executor': own JVM with N task slots, disjoint input shard.
-
-    Default mode is NOT CPU-pinned: hard-pinning a JVM+its python workers
-    to exactly N SATURATED cores collapses the Arrow socket
-    producer-consumer handoff (measured 5-9x slowdown — every wakeup
-    waits out a timeslice). Real executors are scheduled by the OS the
-    same floating way. The solo baseline may therefore borrow idle
-    cores, which makes the reported efficiency a LOWER bound.
-
-    Symmetric-pinned mode (``pin=True``, optional 6th/7th tuple slots):
-    the shard is pinned to a 2N-core set for its N task slots — N JVM
-    task threads + N python workers = 2N heavy threads on 2N dedicated
-    cores, so nothing is oversubscribed and the trap above (2N threads
-    on N cores) does not apply. EVERY JVM in the comparison — the solo
-    baseline included — gets the identical 2N-core grant, which is
-    exactly how a cgroup-isolated cluster executor is sized; the solo
-    leg can no longer borrow the idle host, so the ratio measures the
-    software, not the scheduler's charity."""
-    cpu_lo, cpu_hi, start, n_pages, out_path = args[:5]
-    pin = bool(args[5]) if len(args) > 5 else False
-    task_cpus = args[6] if len(args) > 6 else None
-    import json as _json
-
-    if pin:
-        os.sched_setaffinity(0, range(cpu_lo, cpu_hi))
-    cpus = task_cpus if task_cpus is not None else cpu_hi - cpu_lo
-    # bigger Arrow batches for CO-RESIDENT JVMs: each batch is a socket
-    # handoff between the JVM and its python workers, and with 4 JVMs
-    # sharing one kernel the handoff wakeups are the syscall pressure
-    # that shows up as 30-75% system CPU; 4x the batch = 1/4 the
-    # handoffs (single-JVM throughput is flat across this range — see
-    # the sweep in BASELINE.md).
-    os.environ.setdefault("SPARK_GRAFT_ARROW_BATCH", "262144")
-    # non-purging Arrow allocator for the python workers (they inherit
-    # this env through the JVM): jemalloc's background purge issues
-    # madvise storms that show up as system CPU when 4 JVM+worker trees
-    # share one kernel (round-2 diagnosis; now actually wired).
-    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-    # same per-executor heap at BOTH levels; 4 concurrent JVMs must fit
-    # in host RAM (4 x 48g would thrash a 125g box)
-    spark = make_spark(cpus, memory="16g")
-    spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql import functions as F
-
-    from logparser_spark.functions.formats import DEFAULT_FORMAT, compile_format
-    from logparser_spark.operators import enrich
-    from logparser_spark.operators.parse import explode_lines, parse_lines_arrow
-    from logparser_spark.operators.route import fixture_sinks, sink_column
-    from logparser_spark.sources.pages import synth_pages
-
-    spec = compile_format(DEFAULT_FORMAT)
-    sinks = fixture_sinks()
-
-    def run(st, n):
-        pages = enrich.page_host_cols(synth_pages(spark, n, cpus * 8, start=st))
-        lines = explode_lines(pages, keep_cols=["doc_id", "tld", "lang"])
-        # co-resident local JVMs: mapInArrow degrades gracefully under
-        # host contention while the arrow_udf path's ArrowEvalPython
-        # buffering collapses 3x (measured both rounds; on a real
-        # cluster executors don't share a kernel and arrowudf wins)
-        parsed = parse_lines_arrow(
-            lines, spec, drop_cols=["raw_line"], strategy="mapinarrow"
-        )
-        enriched = enrich.enrich_all(parsed, spark)
-        aggs = [F.count(F.lit(1)).alias("total_lines")] + [
-            F.sum(sink_column(s, spec).cast("long")).alias(s.name)
-            for s in sinks
-        ]
-        row = enriched.agg(*aggs).collect()[0]
-        return row
-
-    run(start, max(n_pages // 10, 1000))  # warm
-    t0 = time.time()
-    row = run(start, n_pages)
-    dt = time.time() - t0
-    with open(out_path, "w") as f:
-        _json.dump(
-            {
-                "sec": dt,
-                "lines": int(row["total_lines"]),
-                "sinks": {s.name: int(row[s.name]) for s in fixture_sinks()},
-            },
-            f,
-        )
-    spark.stop()
-
-
-def _host_control_exec(nprocs: int) -> float:
-    """Executor-model host control: ``nprocs`` UNPINNED concurrent
-    CPU-bound processes (the same floating scheduling the Spark legs
-    use), fixed work per process. Run in the SAME window as the Spark
-    legs, it measures the host's own 1-vs-4-process-group scaling
-    ceiling so the Spark number can be attributed: software efficiency
-    = job efficiency / host efficiency."""
-    import multiprocessing as mp
-
-    n_items = nprocs * 2
-    t0 = time.time()
-    with mp.Pool(nprocs) as p:
-        p.map(_control_work, [(i, 0) for i in range(n_items)])
-    return n_items / (time.time() - t0)
-
-
-def _stream_control_work(_):
-    """One unit of memory-STREAMING work: the engine's own Arrow parse
-    kernel over 0.5M in-RAM lines — no Spark, no JVM, no sockets."""
-    import pyarrow as pa
-
-    from logparser_spark.functions.formats import (
-        DEFAULT_FORMAT,
-        compile_format,
-    )
-    from logparser_spark.operators.parse import _batch_parse_arrow, _fast_plan
-    from logparser_spark.sources.corpus import GOLDEN_LINES
-
-    spec = compile_format(DEFAULT_FORMAT)
-    rx, suffix = _fast_plan(spec)
-    arr = pa.array(GOLDEN_LINES * (500_000 // len(GOLDEN_LINES)))
-    _batch_parse_arrow(arr, spec, rx, suffix)
-
-
-def _host_control_stream(nprocs: int) -> float:
-    """Memory-streaming host control at ``nprocs`` concurrency: the
-    pure-CPU regex control is cache-resident and scales cleanly even in
-    windows where string-STREAMING work collapses (measured: 32
-    concurrent pyarrow parse processes aggregate LESS than 8 — identical
-    tasks take 2.2s at n=8 and 19.6s at n=32, with zero Spark involved —
-    while the regex control reads 0.92+). This control runs the
-    engine's own kernel with no Spark at all, so the ratio
-    (rate@4N / rate@N) / 4 is the HOST's ceiling for this workload
-    class: memory bandwidth + hypervisor behavior under many active
-    string-churning cores. Real multi-node clusters add memory
-    controllers with every node; this single-box ceiling does not exist
-    across executors there."""
-    import multiprocessing as mp
-
-    t0 = time.time()
-    with mp.Pool(nprocs) as p:
-        p.map(_stream_control_work, range(nprocs))
-    return nprocs / (time.time() - t0)
-
-
-def run_scaling_executors(exec_cpus: int = 8, n_exec: int = 4,
-                          total_pages: int = 800_000,
-                          max_attempts: int = 3,
-                          pin_symmetric: bool = False) -> dict:
-    """Retry wrapper: the host intermittently enters windows where ANY
-    concurrent multi-process work crawls 10x (same script measured 17s
-    and 168s per shard an hour apart).
-
-    Attempt selection is gated on the INDEPENDENT same-window host
-    control (see ADVICE round 2: keying keep-best on the reported
-    metric alone biases it upward): best attempt among those whose
-    pure-CPU 8-vs-32-process control scaled cleanly (host_eff >= 0.75),
-    overall best only if no window was clean. Every attempt's job/host
-    efficiency is recorded on the result."""
-    attempts = []
-    for _ in range(max_attempts):
-        r = _run_scaling_executors_once(exec_cpus, n_exec, total_pages,
-                                        pin_symmetric=pin_symmetric)
-        attempts.append(r)
-        if (r["efficiency"] >= 0.8
-                and r.get("host_control_eff", 0) >= 0.75):
-            break
-    clean = [r for r in attempts
-             if r.get("host_control_eff", 0) >= 0.75]
-    best = max(clean or attempts, key=lambda r: r["efficiency"])
-    effs = sorted(r["efficiency"] for r in attempts)
-    mid = len(effs) // 2
-    best["attempt_effs"] = [round(r["efficiency"], 3) for r in attempts]
-    best["attempt_host_effs"] = [
-        round(r.get("host_control_eff", 0), 3) for r in attempts
-    ]
-    best["median_attempt_eff"] = round(
-        effs[mid] if len(effs) % 2 else (effs[mid - 1] + effs[mid]) / 2, 3
-    )
-    best["control_gated"] = bool(clean)
-    # every attempt's triple survives into state — the round headline
-    # is the MEDIAN over control-clean attempts, not this keep-best.
-    # SPARK_GRAFT_CFG_SUFFIX distinguishes same-geometry variants that
-    # must NOT share an evidence pool (e.g. the round-5 long-job "L"
-    # lines: identical 2-core pinned geometry but 3x the input, so the
-    # ~2s per-job serial constant stops capping the ratio — trap #6's
-    # documented fix; pooling them with the pre-registered short-job
-    # config would retroactively change that config's definition).
-    cfg = (f"{exec_cpus}c" + ("p" if pin_symmetric else "")
-           + os.environ.get("SPARK_GRAFT_CFG_SUFFIX", ""))
-    best["all_attempts"] = [
-        {
-            "eff": round(r["efficiency"], 3),
-            "host_eff": round(r.get("host_control_eff") or 0, 3),
-            "stream_eff": (round(r["host_stream_eff"], 3)
-                           if r.get("host_stream_eff") is not None
-                           else None),
-            "cfg": cfg,
-        }
-        for r in attempts
-    ]
-    return best
-
-
-def _run_scaling_executors_once(exec_cpus: int = 8, n_exec: int = 4,
-                                total_pages: int = 800_000,
-                                pin_symmetric: bool = False) -> dict:
-    """Executor-model N vs 4N: one 8-core JVM over the full input vs
-    four concurrent 8-core JVMs over disjoint quarters (each JVM = one
-    executor, its own scheduler/allocator — the honest cluster proxy;
-    a single big local JVM saturates shared driver-side machinery that
-    real multi-executor clusters do not share)."""
-    import tempfile
-
-    import multiprocessing as mp
-
-    d = tempfile.mkdtemp(prefix="scale_exec_")
-    # same-window host controls, leg 1: cache-resident CPU control and
-    # memory-streaming control at the 1-executor concurrency
-    ctl_lo = _host_control_exec(exec_cpus)
-    stream_lo = _host_control_stream(exec_cpus)
-    # N executors = 1: full input on one 8-core JVM
-    p1 = os.path.join(d, "one.json")
-    proc = mp.Process(
-        target=_executor_shard,
-        args=((0, 2 * exec_cpus if pin_symmetric else exec_cpus, 0,
-               total_pages, p1, pin_symmetric, exec_cpus),)
-    )
-    proc.start(); proc.join(timeout=900)
-    if proc.is_alive():  # degraded-window deadlock: poison the attempt
-        proc.kill(); proc.join()
-        return {"efficiency": -1, "exec_cpus": exec_cpus,
-                "n_executors": [1, n_exec], "timed_out": True}
-    one = json.load(open(p1))
-
-    # 4N: four JVMs, disjoint cores AND disjoint page ranges, concurrent
-    shard = total_pages // n_exec
-    procs, paths = [], []
-    import threading
-
-    cpu_samples: list = []
-    stop = threading.Event()
-
-    def _sample():
-        prev = None
-        while not stop.is_set():
-            v = list(map(int, open("/proc/stat").readline().split()[1:9]))
-            if prev is not None:
-                dlt = [a - b for a, b in zip(v, prev)]
-                tot = sum(dlt)
-                if tot:
-                    cpu_samples.append((dlt[0] / tot, dlt[2] / tot))
-            prev = v
-            time.sleep(2)
-
-    smp = threading.Thread(target=_sample, daemon=True)
-    smp.start()
-    t0 = time.time()
-    for i in range(n_exec):
-        pth = os.path.join(d, f"q{i}.json")
-        paths.append(pth)
-        w = 2 * exec_cpus if pin_symmetric else exec_cpus
-        pr = mp.Process(
-            target=_executor_shard,
-            args=(
-                (i * w, (i + 1) * w, i * shard, shard, pth,
-                 pin_symmetric, exec_cpus),
-            ),
-        )
-        pr.start(); procs.append(pr)
-    deadline = time.time() + 900
-    for pr in procs:
-        pr.join(timeout=max(deadline - time.time(), 1))
-    if any(pr.is_alive() for pr in procs):
-        for pr in procs:
-            if pr.is_alive():
-                pr.kill(); pr.join()
-        stop.set()
-        return {"efficiency": -1, "exec_cpus": exec_cpus,
-                "n_executors": [1, n_exec], "timed_out": True}
-    stop.set()
-    # same-window host controls, leg 2: 32 unpinned processes (run right
-    # after the 4-way Spark leg so they sample the same host state)
-    ctl_hi = _host_control_exec(exec_cpus * n_exec)
-    stream_hi = _host_control_stream(exec_cpus * n_exec)
-    host_eff = (ctl_hi / ctl_lo) / n_exec if ctl_lo else 0.0
-    stream_eff = (stream_hi / stream_lo) / n_exec if stream_lo else 0.0
-    sys_frac = (
-        sum(s[1] for s in cpu_samples) / len(cpu_samples)
-        if cpu_samples else 0.0
-    )
-    quarters = [json.load(open(p)) for p in paths]
-    wall4 = max(q["sec"] for q in quarters)
-
-    lines1 = one["lines"]
-    lines4 = sum(q["lines"] for q in quarters)
-    sinks4 = {
-        k: sum(q["sinks"][k] for q in quarters) for k in quarters[0]["sinks"]
-    }
-    rps1 = lines1 / one["sec"]
-    rps4 = lines4 / wall4
-    eff = (rps4 / rps1) / n_exec
-    return {
-        "pin_symmetric": pin_symmetric,
-        "sys_cpu_frac_4way": round(sys_frac, 3),
-        "host_control_ips": [round(ctl_lo, 2), round(ctl_hi, 2)],
-        "host_control_eff": round(host_eff, 3),
-        "host_stream_ips": [round(stream_lo, 2), round(stream_hi, 2)],
-        "host_stream_eff": round(stream_eff, 3),
-        "exec_cpus": exec_cpus,
-        "n_executors": [1, n_exec],
-        "lines": lines1,
-        "one_jvm_sec": round(one["sec"], 3),
-        "four_jvm_sec": round(wall4, 3),
-        "rows_per_sec": [int(rps1), int(rps4)],
-        "efficiency": round(eff, 3),
-        "counts_equal": sinks4 == one["sinks"],
-        "sink_counts": sinks4,
-    }
-
-
-def write_executor_report(r: dict) -> None:
-    if r.get("timed_out"):
-        return  # poisoned attempt; keep whatever record exists
-    state = _load_state()
-    prev = state.get("executors")
-    hist = list((prev or {}).get("eff_history", []))
-    hist.append(round(r["efficiency"], 3))
-    if prev is None or r["efficiency"] > prev.get("efficiency", -1):
-        state["executors"] = r
-    state["executors"]["eff_history"] = hist
-    # append EVERY attempt (clean or not) to the round-long log; the
-    # honest headline is median-over-clean-attempts, computed at render
-    log = list(state.get("exec_attempt_log", []))
-    log.extend(r.get("all_attempts")
-               or [{"eff": round(r["efficiency"], 3),
-                    "host_eff": round(r.get("host_control_eff") or 0, 3),
-                    "stream_eff": (round(r["host_stream_eff"], 3)
-                                   if r.get("host_stream_eff") is not None
-                                   else None),
-                    "cfg": (f"{r['exec_cpus']}c"
-                            + ("p" if r.get("pin_symmetric") else ""))}])
-    state["exec_attempt_log"] = log
-    state["executors"].pop("all_attempts", None)
-    # ALSO keep the best fully-instrumented attempt: the keep-best
-    # record may predate the dual-control instrumentation, and the
-    # attribution evidence (host CPU + streaming controls measured in
-    # the same window) matters even when the attempt's raw number lost
-    if r.get("host_stream_eff") is not None:
-        li = state.get("executors_instr")
-        if li is None or r["efficiency"] > li.get("efficiency", -1):
-            state["executors_instr"] = r
-    _save_state(state)
-    _render_baseline_md(state)
-
-
-def _render_executor_section(f, r: dict, attempt_log=None) -> None:
-    if True:
-        f.write(
-            "\n## Executor-model scaling "
-            "(1 vs 4 independent JVMs — the closer cluster proxy)\n\n"
-        )
-        # HEADLINE: the median over control-clean attempts across the
-        # whole round (VERDICT r03 item 5 — the keep-best draw below is
-        # selection-biased by construction; the median over attempts
-        # whose independent same-window host control scaled cleanly is
-        # the honest central estimate).
-        if attempt_log:
-            def _med(xs):
-                xs = sorted(xs)
-                if not xs:
-                    return None
-                mid = len(xs) // 2
-                return (xs[mid] if len(xs) % 2
-                        else round((xs[mid - 1] + xs[mid]) / 2, 3))
-
-            # Per-config evidence lines: the ledger tags each attempt
-            # with its executor geometry (cfg "<cores>c[p]"; untagged
-            # entries predate the tag and were all launched as the
-            # 4-core symmetric-pinned fair-fit config per the round
-            # log).  The primary line stays the fair-fit config; other
-            # geometries (e.g. 2-core executors, whose 4-way leg keeps
-            # total streaming cores BELOW the measured single-host
-            # bandwidth wall) are disclosed separately below.
-            # Entries carrying a "tainted" reason (e.g. the builder ran
-            # concurrent Spark jobs during the invocation — load the
-            # bursty controls can miss) are excluded from every median
-            # but still printed below with their reason, so the
-            # exclusion is auditable rather than silent.
-            tainted = [a for a in attempt_log if a.get("tainted")]
-            live = [a for a in attempt_log if not a.get("tainted")]
-            primary = [a for a in live
-                       if a.get("cfg", "4cp") == "4cp"]
-            others: dict = {}
-            for a in live:
-                c = a.get("cfg", "4cp")
-                if c != "4cp":
-                    others.setdefault(c, []).append(a)
-            a_clean = [a["eff"] for a in primary
-                       if a.get("host_eff", 0) >= 0.75]
-            ab_clean = [a["eff"] for a in primary
-                        if a.get("host_eff", 0) >= 0.75
-                        and (a.get("stream_eff") or 0) >= 0.9]
-            band_clean = [a["eff"] for a in primary
-                          if a.get("host_eff", 0) >= 0.75
-                          and 0.9 <= (a.get("stream_eff") or 0) <= 1.5]
-            med_a, med_ab = _med(a_clean), _med(ab_clean)
-            med_band = _med(band_clean)
-            if med_a is not None:
-                f.write(
-                    f"**HEADLINE — median efficiency over control-clean "
-                    f"attempts this round: {med_ab if med_ab is not None else med_a}"
-                    f"** (clean = BOTH same-window controls healthy: "
-                    f"pure-CPU host control A ≥ 0.75 AND the "
-                    f"resource-matched memory-streaming control B ≥ 0.9 "
-                    f"— B collapsing means the window itself was "
-                    f"bandwidth-degraded with zero Spark involved; "
-                    f"{len(ab_clean)} such of {len(primary)} total "
-                    f"fair-fit attempts). Under the weaker A-only gate the median "
-                    f"is {med_a} over {len(a_clean)} attempts; under a "
-                    f"sanity-banded B gate (0.9 ≤ B ≤ 1.5 — a resource-"
-                    f"matched control reading far ABOVE 1 means the "
-                    f"window shifted under the measurement, e.g. the "
-                    f"logged B=12.13 artifact) the median is {med_band} "
-                    f"over {len(band_clean)} attempts. All three "
-                    f"disclosed so the gate choice is auditable; the "
-                    f"headline stays the pre-registered AB gate. "
-                    f"All fair-fit attempts (eff / host A / stream B): "
-                    + str([
-                        (a['eff'], a['host_eff'], a.get('stream_eff'))
-                        for a in primary
-                    ])
-                    + ". The keep-best table below is the single best "
-                    f"clean draw — the optimistic bound; the median "
-                    f"above is the central estimate.\n\n"
-                )
-            else:
-                f.write(
-                    f"**HEADLINE: no control-clean fair-fit attempt this "
-                    f"round yet** ({len(primary)} attempts, all with host "
-                    f"control < 0.75 — every window was degraded; "
-                    f"attempt effs {[a['eff'] for a in primary]}). "
-                    f"The keep-best record below is from a prior round's "
-                    f"clean window.\n\n"
-                )
-            if tainted:
-                f.write(
-                    "Excluded from all medians (tainted, disclosed): "
-                    + str([
-                        (a["eff"], a.get("cfg", "4cp"), a["tainted"])
-                        for a in tainted
-                    ])
-                    + "\n\n"
-                )
-            for c, grp in sorted(others.items()):
-                g_ab = sorted(a["eff"] for a in grp
-                              if a.get("host_eff", 0) >= 0.75
-                              and (a.get("stream_eff") or 0) >= 0.9)
-                m = re.match(r"^(\d+)c(p?)(L?)$", c)
-                cores = m.group(1) if m else c
-                long_job = bool(m and m.group(3))
-                f.write(
-                    f"**Secondary evidence line — config {c}** "
-                    f"({cores}-core executors"
-                    + (", symmetric-pinned" if m and m.group(2) else "")
-                    + (", LONG-JOB: 3x the input so the ~2s per-job "
-                       "serial constant stops capping the ratio (the "
-                       "short-job fast leg runs ~12s, where 2s of "
-                       "fixed driver/plan time alone caps efficiency "
-                       "near 0.87 even on an ideal host — trap #6)"
-                       if long_job else "")
-                    + f"): {len(grp)} attempts, AB-clean median "
-                    f"{_med(g_ab)} over {len(g_ab)} clean "
-                    f"(all eff / host A / stream B: "
-                    + str([(a['eff'], a['host_eff'], a.get('stream_eff'))
-                           for a in grp])
-                    + ")."
-                    + (" With 2-core executors the 4-executor leg runs "
-                       "8 streaming cores total — BELOW the single-host "
-                       "bandwidth wall that the fair-fit config's 16-32 "
-                       "streaming threads hit — so this line isolates "
-                       "Spark-software scaling from the host ceiling; a "
-                       "real cluster's 4N executors bring 4N memory "
-                       "controllers and live on this side of the wall."
-                       if cores == "2" else "")
-                    + "\n\n"
-                )
-        f.write(
-            "A 1000-executor cluster is many independent JVMs, not one "
-            "giant local[N]: a single local JVM shares one DAG scheduler, "
-            "one Arrow allocator and one daemon across all cores, which "
-            "caps in-JVM scaling. This run compares ONE "
-            f"local[{r['exec_cpus']}] JVM over "
-            f"the full input vs FOUR concurrent local[{r['exec_cpus']}] "
-            "JVMs over disjoint "
-            "quarters (each JVM = one executor"
-            + ("; every JVM pinned to its own dedicated core set — see "
-               "the paragraph below"
-               if r.get("pin_symmetric") else
-               "; unpinned — see bench.py:_executor_shard for why "
-               "oversubscribed hard pinning is unrepresentative; the "
-               "solo baseline may borrow idle cores, so the efficiency "
-               "is a lower bound")
-            + ").\n\n"
-            + ("Recorded run is SYMMETRIC-PINNED: every JVM (the solo "
-               "baseline included) holds an identical dedicated "
-               "2N-core set for its N task slots (N task threads + N "
-               "python workers = 2N threads on 2N cores — nothing "
-               "oversubscribed, so the known pin-collapse trap does "
-               "not apply). This is the cgroup grant a real cluster "
-               "executor gets; it removes the solo leg's idle-host "
-               "core borrowing that made the unpinned number a lower "
-               "bound.\n\n" if r.get("pin_symmetric") else "")
-            + f"| config | lines | sec | rows/sec |\n|---|---|---|---|\n"
-            f"| 1 x local[{r['exec_cpus']}] | {r['lines']} | "
-            f"{r['one_jvm_sec']} | {r['rows_per_sec'][0]} |\n"
-            f"| 4 x local[{r['exec_cpus']}] | {r['lines']} | "
-            f"{r['four_jvm_sec']} | {r['rows_per_sec'][1]} |\n\n"
-            f"**Executor-model scaling efficiency (1→4 executors): "
-            f"{r['efficiency']}** (lower bound; target ≥ 0.8). Per-sink "
-            f"routed counts identical across sharding: "
-            f"{r['counts_equal']}.\n\n"
-        )
-        host_eff = r.get("host_control_eff")
-        if host_eff:
-            f.write(
-                f"Same-window host control A (pure-CPU cache-resident "
-                f"regex, NO Spark, same process counts: "
-                f"{r['exec_cpus']} unpinned processes before the 1-JVM "
-                f"leg vs {r['exec_cpus'] * r['n_executors'][1]} right "
-                f"after the 4-JVM leg): host efficiency {host_eff} "
-                f"(items/s {r.get('host_control_ips')}) — detects raw "
-                f"CPU steal/frequency loss.\n\n"
-            )
-        stream_eff = r.get("host_stream_eff")
-        if stream_eff:
-            # a control that scaled cleanly (>= 1, incl. noisy
-            # super-linear draws) certifies NO host penalty — never
-            # divide by it, or noise inflates/deflates the attribution
-            attributed = min(r["efficiency"] / min(stream_eff, 1.0), 1.0)
-            f.write(
-                f"Same-window host control B (memory-STREAMING: the "
-                f"engine's own Arrow parse kernel over in-RAM lines, NO "
-                f"Spark/JVM/sockets, same process counts): host "
-                f"efficiency {stream_eff} "
-                f"(tasks/s {r.get('host_stream_ips')}). This is the "
-                f"resource-matched ceiling — the workload streams "
-                f"hundreds of MB/s/core of strings, and this single box "
-                f"cannot feed {r['exec_cpus'] * r['n_executors'][1]} "
-                f"such cores (measured with zero Spark involved; a "
-                f"multi-node cluster adds memory controllers with every "
-                f"node, so this wall does not exist across executors). "
-                f"Host-attributed software efficiency = "
-                f"{r['efficiency']:.3f} / "
-                f"{min(stream_eff, 1.0):.3f} (ceiling clamped at 1: a "
-                f"clean control certifies no host penalty) = "
-                f"**{attributed:.3f}**.\n\n"
-            )
-        if r.get("attempt_effs"):
-            gate = ("chosen among clean-host-control attempts"
-                    if r.get("control_gated")
-                    else "NO attempt had a clean host control; "
-                         "overall best kept")
-            f.write(
-                f"Within-run attempts (job eff): {r['attempt_effs']}, "
-                f"host-control eff per attempt: "
-                f"{r.get('attempt_host_effs')}, median "
-                f"{r.get('median_attempt_eff')} — {gate}.\n\n"
-            )
-        if r.get("eff_history") and len(r["eff_history"]) > 1:
-            f.write(
-                f"Keep-best history across invocations: "
-                f"{r['eff_history']} (the table shows the best draw).\n\n"
-            )
-        f.write(
-            f"Diagnostics: system-CPU fraction during the 4-way leg was "
-            f"{r.get('sys_cpu_frac_4way', 'n/a')} — degraded windows on "
-            f"this sandbox host show up as 50-80% kernel time under ANY "
-            f"concurrent multi-process load (identical runs vary 5-10x). "
-            f"On a real multi-node cluster each executor owns its kernel; "
-            f"this contention does not exist there.\n"
-        )
-
-
 if __name__ == "__main__":
-    if "--scaling-executors" in sys.argv:
-        # optional positional overrides: exec_cpus [total_pages].
-        # exec_cpus=4 is the fair-fit config on a 32-core host: the
-        # 4-executor leg runs 4 x (4 task + 4 python) = 32 threads,
-        # exactly the host's cores — the same structure that makes the
-        # in-JVM 4/16 pair the fair one (8-core executors put 64
-        # threads on 32 cores, a 2x oversubscription no real cluster
-        # has).
-        i = sys.argv.index("--scaling-executors")
-        nums = [int(a) for a in sys.argv[i + 1:i + 3] if a.isdigit()]
-        kw = {}
-        if nums:
-            kw["exec_cpus"] = nums[0]
-        if len(nums) > 1:
-            kw["total_pages"] = nums[1]
-        if "--pinned" in sys.argv:
-            # symmetric 2N-core grants for every JVM (solo included);
-            # needs 2 * exec_cpus * 4 <= host cores
-            kw["pin_symmetric"] = True
-        r = run_scaling_executors(**kw)
-        write_executor_report(r)
-        print(json.dumps(r))
-    elif "--single-throughput" in sys.argv:
-        print(json.dumps(single_throughput()))
-    elif "--steady" in sys.argv:
-        print(json.dumps(run_steady_probe()))
-    elif "--scaling" in sys.argv:
-        i = sys.argv.index("--scaling")
-        nums = [int(a) for a in sys.argv[i + 1:i + 3] if a.isdigit()]
-        levels = tuple(nums) if len(nums) == 2 else (8, 32)
-        results = run_scaling(levels)
-        path = write_scaling_report(results)
-        lo, hi = results[0], results[-1]
-        eff = (hi["rows_per_sec"] / max(lo["rows_per_sec"], 1)) / (hi["cpus"] / lo["cpus"])
-        print(json.dumps({"scaling": results, "efficiency": round(eff, 3), "report": path}))
-    else:
-        print(json.dumps(run_bench()))
+    print(json.dumps(run_bench()))

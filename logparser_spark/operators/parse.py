@@ -2,29 +2,38 @@
 
 The core custom operator (SURVEY.md §4 item 1). Catalyst cannot express the
 reference's format-spec semantics (INT zero-rule, trailing-field
-optionality, NCHAR), so parsing runs inside ONE Arrow-batched pandas UDF
-per line column, in three tiers:
+optionality, NCHAR), so parsing runs in Python over Arrow batches of the
+line column. There is one physical path per spec shape, chosen by
+``parse_lines`` from the spec alone:
 
-1. **pyarrow fast path** — a flat RE2 pattern (``FormatSpec.to_fast_regex``,
-   emitted only when provably capture-equal to the walker) run through
-   ``pyarrow.compute.extract_regex``: pure C++, zero Python objects,
-   ~1M rows/s/core. Covers virtually all well-formed production lines.
-2. **nested-regex middle path** — the anchored possessive Python regex
-   (``FormatSpec.to_regex``) via ``pandas.Series.str.extract`` on only
-   the rows tier 1 rejected; handles trailing-field optionality and
-   zero-width whitespace the flat pattern cannot express
-   (``/root/reference/src/line_parsing/line_parser.cpp:58-98``).
-3. **oracle walker fallback** — per-row pure Python, only for rows tier 2
-   rejects or flags (the walker can succeed where no regex can:
-   ``parse_int`` accepts ``-5`` by value without consuming the sign,
-   ``parsing_basics.cpp:7-13``; ``atof`` value/cursor divergences). The
-   byte-exact oracle (``functions.oracle.parse_line``) decides those rows.
+- **Specs with a flat regex** (``FormatSpec.to_fast_regex()`` is not
+  None — emitted only when provably capture-equal to the walker; every
+  production format): ``parse_lines_arrow`` attaches one scalar Arrow UDF
+  (``make_arrow_parse_udf``). Only the line column crosses into Python
+  and only the parsed struct comes back; every passthrough column stays
+  JVM-side. Its kernel ``_batch_parse_arrow`` never builds Python string
+  objects for decided rows:
 
-Scale notes (100 TB): the UDF sees a single string column per batch; all
-other columns stay JVM-side. Everything upstream (split/posexplode/CRLF
-strip) and downstream (filters, joins, aggregates) is pure Catalyst, so
-predicate pushdown and whole-stage codegen are unaffected. The Python
-worker cost is one C-regex pass per batch; fallback rows are O(malformed).
+  1. flat-regex tier — the capture-free split plan (``fastsplit``) for
+     recognized spec shapes, else ``pyarrow.compute.extract_regex``;
+  2. the rows tier 1 leaves undecided (malformed, trailing-optional,
+     zero-width WS, >18-digit INT, calendar-invalid DATE) go to the
+     NumPy walker (``walker_np.batch_walk_arrow``), which itself bails
+     per row to the byte-exact oracle (``functions.oracle.parse_line``)
+     only for atol-overflow / unicode / DBL territory.
+
+- **Specs without a flat regex** (DBL fields, ambiguous specs): the
+  nested tier, a pandas UDF (``make_parse_udf``) running the anchored
+  possessive Python regex (``FormatSpec.to_regex``) via
+  ``pandas.Series.str.extract``, with the oracle walker on the rows it
+  rejects or flags (``line_parser.cpp:58-98``; the walker can succeed
+  where no regex can: ``parse_int`` accepts ``-5`` by value without
+  consuming the sign, ``parsing_basics.cpp:7-13``; ``atof``
+  value/cursor divergences).
+
+Everything upstream (split/posexplode/CRLF strip) and downstream
+(filters, joins, aggregates) is pure Catalyst, so predicate pushdown and
+whole-stage codegen are unaffected; fallback rows are O(malformed).
 
 Unicode contract: the reference parses raw BYTES (``parsing_basics.cpp``
 walks ``char*``); the default mode here counts codepoints — the two are
@@ -51,7 +60,7 @@ import pyarrow as pa  # module-level: arrow_udf type-hint resolution needs it
 from ..functions.formats import FieldType, FormatSpec
 from ..functions.oracle import parse_line as oracle_parse_line
 
-__all__ = ["explode_lines", "make_arrow_parse_udf", "make_parse_udf", "parse_lines", "parse_lines_arrow", "parse_lines_hybrid", "parse_lines_multi", "parsed_to_json", "render_parsed"]
+__all__ = ["explode_lines", "make_arrow_parse_udf", "make_parse_udf", "parse_lines", "parse_lines_arrow", "parse_lines_multi", "parsed_to_json", "render_parsed"]
 
 
 def _fast_plan(spec: FormatSpec):
@@ -130,10 +139,10 @@ def _date_arrays_from_captures(child, row_valid):
 
 
 def _dates_from_str_series(s: pd.Series):
-    """pandas-tier DATE conversion: object Series of shape-valid
+    """Nested-tier DATE conversion: object Series of shape-valid
     'YYYY-MM-DD'/None → (object Series of datetime.date/None,
     calendar-invalid ndarray). Per-row datetime.date is acceptable
-    here — the pandas tiers are the non-hot path; the Arrow kernel
+    here — the nested tier is the non-hot path; the Arrow kernel
     uses the vectorized civil-date math."""
     import datetime
 
@@ -153,101 +162,6 @@ def _dates_from_str_series(s: pd.Series):
             vals.append(None)
             invalid[j] = True
     return pd.Series(vals, index=s.index, dtype="object"), invalid
-
-
-def _batch_parse_fast(lines: pd.Series, spec: FormatSpec, fast_rx: str,
-                      unset_suffix: list):
-    """Tier-1: pyarrow extract_regex. Returns (result_df, well, decided)
-    where ``decided`` marks rows the fast path fully resolved."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    arr = pa.Array.from_pandas(lines)
-    st = pc.extract_regex(arr, pattern=fast_rx)
-    valid = pc.is_valid(st)
-    # >18-digit INT captures route to the exact tiers (int64 SATURATION
-    # contract, functions.oracle._atol) — a raw cast would raise.
-    for _, (i, f) in enumerate(spec.output_fields()):
-        if f.ftype == FieldType.INT:
-            long_run = pc.fill_null(
-                pc.greater(pc.utf8_length(st.field(f"g{i}")), 18), False
-            )
-            valid = pc.and_(valid, pc.invert(long_run))
-    valid_np = valid.to_numpy(zero_copy_only=False)
-
-    cols = spec.column_names()
-    data = {}
-    str_cols = {}
-    for k, (i, f) in enumerate(spec.output_fields()):
-        child = pc.if_else(valid, st.field(f"g{i}"), pa.scalar(None, pa.string()))
-        if f.ftype == FieldType.INT:
-            data[cols[k]] = child.cast(pa.int64()).to_pandas().astype("Int64")
-        elif f.ftype == FieldType.DATE:
-            dates, invalid = _dates_from_str_series(child.to_pandas())
-            data[cols[k]] = dates
-            # calendar-invalid rows are undecided (the exact tiers'
-            # walker rejects them => malformed); the merged result row
-            # is fully overwritten there
-            valid_np = valid_np & ~invalid
-        else:
-            s = child.to_pandas()
-            data[cols[k]] = s
-            str_cols[k] = s
-    result = pd.DataFrame(data, index=lines.index)
-
-    # Trailing zero-width captures: '' here means the walker's cursor was
-    # already at EOL, i.e. the field is UNSET (None), not empty
-    # (line_parser.cpp:65 `s < end` guard). Walk the suffix backwards.
-    if unset_suffix:
-        tail_zero = valid_np.copy()
-        for k in unset_suffix:  # already last-to-first
-            s = str_cols[k]
-            is_empty = (s.str.len() == 0).fillna(False).to_numpy()
-            unset = tail_zero & is_empty
-            if unset.any():
-                s2 = s.copy()
-                s2[unset] = None
-                result[cols[k]] = s2
-            tail_zero = tail_zero & is_empty
-    return result, valid_np
-
-
-def _batch_parse(lines: pd.Series, spec: FormatSpec,
-                 byte_mode: bool = False) -> pd.DataFrame:
-    """Parse one Arrow batch: tier-1 pyarrow flat regex, then the nested
-    regex + walker on the remainder."""
-    s = lines.astype("object")
-    fast_rx, unset_suffix = _fast_plan(spec)
-    if fast_rx is None:
-        return _batch_parse_nested(s, spec, byte_mode=byte_mode)
-
-    result, decided = _batch_parse_fast(s, spec, fast_rx, unset_suffix)
-    if byte_mode and spec.byte_sensitive():
-        # fast tier counts codepoints; only pure-ASCII rows are decided
-        nonascii = s.map(
-            lambda x: isinstance(x, str) and not x.isascii()
-        ).to_numpy(dtype=bool)
-        decided = decided & ~nonascii
-    if decided.all():
-        result["well_formed"] = True
-        return result
-    rest_idx = s.index[~decided]
-    rest = _batch_parse_nested(s.loc[rest_idx], spec, byte_mode=byte_mode)
-    result["well_formed"] = pd.Series(decided, index=s.index, dtype=bool)
-    if len(rest_idx):
-        cols = spec.column_names()
-        for c in cols:
-            result.loc[rest_idx, c] = rest[c]
-        result.loc[rest_idx, "well_formed"] = rest["well_formed"].astype(bool)
-        # .loc assignment degrades extension dtypes; restore them
-        for k, (i, f) in enumerate(spec.output_fields()):
-            if f.ftype == FieldType.INT:
-                result[cols[k]] = result[cols[k]].astype("Int64")
-            elif f.ftype == FieldType.DBL:
-                result[cols[k]] = result[cols[k]].astype("float64")
-        result["well_formed"] = result["well_formed"].astype(bool)
-    return result
 
 
 def _batch_parse_nested(lines: pd.Series, spec: FormatSpec,
@@ -359,7 +273,9 @@ def _batch_parse_nested(lines: pd.Series, spec: FormatSpec,
 
 
 def make_parse_udf(spec: FormatSpec, byte_mode: bool = False):
-    """Build the pandas UDF ``string -> struct<fields..., well_formed>``.
+    """Build the nested-tier pandas UDF ``string -> struct<fields...,
+    well_formed>`` (``_batch_parse_nested``): the path ``parse_lines``
+    takes for specs without a flat regex. Exact for every spec.
 
     The compiled spec travels to executors via closure capture (the Spark
     analog of the reference's compile-once parse program,
@@ -370,7 +286,7 @@ def make_parse_udf(spec: FormatSpec, byte_mode: bool = False):
 
     @pandas_udf(schema)
     def parse(lines: pd.Series) -> pd.DataFrame:
-        return _batch_parse(lines, spec, byte_mode=byte_mode)
+        return _batch_parse_nested(lines, spec, byte_mode=byte_mode)
 
     # The parse IS deterministic; the marker is an optimizer fence.
     # Without it, predicate pushdown substitutes the UDF expression into
@@ -492,9 +408,10 @@ def parse_lines(
     """Attach the parsed struct (and the ``matched_format`` tag used by the
     per-format aggregate counts).
 
-    Picks the Arrow-native mapInArrow path automatically when the spec has
-    a provably-sound flat regex (~0.5-0.8M rows/s/core); falls back to the
-    pandas-UDF nested-regex path otherwise (DBL fields, ambiguous specs).
+    Specs with a provably-sound flat regex go through
+    ``parse_lines_arrow`` (the scalar Arrow UDF over the Arrow kernel);
+    specs without one (DBL fields, ambiguous specs) run the nested tier
+    (``make_parse_udf``).
 
     ``byte_mode=True`` selects the reference's exact BYTE semantics
     (NCHAR counts bytes; see the module docstring's Unicode contract) —
@@ -518,17 +435,12 @@ def parse_lines(
     return out
 
 
-# ── Arrow-native hot path (mapInArrow) ────────────────────────────────
+# ── Arrow kernel (specs with a flat regex) ────────────────────────────
 
 
 def _split_plan_for(spec: FormatSpec):
     """Compile (once per spec instance) the capture-free split plan, or
-    None when the spec is outside fastsplit's recognized family or
-    SPARK_GRAFT_SPLIT_PLAN=0 disables it (A/B lever)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPLIT_PLAN", "1") == "0":
-        return None
+    None when the spec is outside fastsplit's recognized family."""
     cached = spec.__dict__.get("_split_plan", "unset")
     if cached == "unset":
         from .fastsplit import compile_any_split_plan
@@ -543,8 +455,13 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
     """Tier-1 + walker, entirely in Arrow: no Python string objects for
     decided rows. Returns (list of output pa.Arrays, well_formed array).
     Undecided rows (flat-regex misses: malformed, trailing-optional,
-    zero-width-WS, walker-only quirks) are resolved by the exact oracle
-    walker per row.
+    zero-width-WS, walker-only quirks) are resolved by the NumPy walker,
+    which is byte-exact against the oracle.
+
+    ``arr`` may be any Arrow string shape Spark hands a UDF: ``string``
+    or ``large_string`` (``spark.sql.execution.arrow.useLargeVarTypes``),
+    chunked or sliced; it is normalised once to a contiguous ``string``
+    array, the int32-offset layout every tier reads.
 
     Tier-1 has two kernels over the SAME flat regex: the capture-free
     DFA-gate + split decomposition (``fastsplit``, ~1.7x the extract
@@ -561,6 +478,9 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from .walker_np import as_string_array, batch_walk_arrow
+
+    arr = as_string_array(arr)
     out_fields = spec.output_fields()
     plan = _split_plan_for(spec)
     plan_typed = plan is not None
@@ -613,8 +533,6 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
     walker_outs = None
     walker_wf = None
     if n_und:
-        from .walker_np import batch_walk_arrow
-
         sub = arr.filter(undecided)
         # vectorized NumPy walker (itself bails per-row to the python
         # oracle only for atol-overflow/unicode/DBL territory)
@@ -652,21 +570,16 @@ def _batch_parse_arrow(arr, spec: FormatSpec, rx: str, unset_suffix: list,
 
 
 def make_arrow_parse_udf(spec: FormatSpec, byte_mode: bool = False):
-    """Scalar Arrow UDF ``string -> struct`` over the tier-1 kernel, or
-    None when the spec has no flat fast regex or the runtime predates
-    ``pyspark.sql.functions.arrow_udf`` (Spark 4.0).
+    """Scalar Arrow UDF ``string -> struct`` over the Arrow kernel
+    (``_batch_parse_arrow``), or None when the spec has no flat fast
+    regex (those specs take the nested tier, ``make_parse_udf``).
 
-    NOT the default path: it is ~10% faster than mapInArrow in a single
-    JVM (only the line column crosses into Python), but measured 5-7x
-    slower when several local JVMs run concurrently on one host
-    (ArrowEvalPython's JVM-side buffering interacts badly with
-    contention), while the mapInArrow path stays healthy. parse_lines
-    therefore prefers mapInArrow; this UDF remains available for
-    expression-style composition."""
+    This is the parse path ``parse_lines_arrow`` (and so ``parse_lines``)
+    attaches for every flat-regex spec: only the line column crosses into
+    Python and only the parsed struct returns. Needs Spark ≥ 4.0
+    (``pyspark.sql.functions.arrow_udf``)."""
     from pyspark.sql import functions as F
 
-    if not hasattr(F, "arrow_udf"):
-        return None
     rx, unset_suffix = _fast_plan(spec)
     if rx is None:
         return None
@@ -674,8 +587,6 @@ def make_arrow_parse_udf(spec: FormatSpec, byte_mode: bool = False):
 
     @F.arrow_udf(spec.spark_schema())
     def parse(lines: pa.Array) -> pa.Array:
-        if isinstance(lines, pa.ChunkedArray):
-            lines = lines.combine_chunks()
         outs, wf = _batch_parse_arrow(
             lines, spec, rx, unset_suffix, byte_mode=byte_mode
         )
@@ -694,79 +605,31 @@ def parse_lines_arrow(
     line_col: str = "raw_line",
     out_col: str = "parsed",
     drop_cols: Optional[Iterable[str]] = None,
-    strategy: Optional[str] = None,
     byte_mode: bool = False,
 ):
-    """Arrow-native parse stage: zero pandas/object materialization on
-    the fast path. Two physical strategies over the SAME kernel:
-
-    - ``"arrowudf"`` (default when the runtime has
-      ``pyspark.sql.functions.arrow_udf``, Spark 4.0+): scalar Arrow UDF
-      — ONLY the line column crosses into Python and only the parsed
-      struct returns; every passthrough column (ids, page dims) stays
-      JVM-side. Measured +37% end-to-end over mapInArrow at local[32]
-      (2.87M vs 2.10M rows/s) because the passthrough transfer is the
-      marginal cost once raw_line is dropped.
-    - ``"mapinarrow"``: whole-batch passthrough. Kept selectable
-      (``strategy=`` or env ``SPARK_GRAFT_PARSE_STRATEGY``) because
-      round-1 measured ArrowEvalPython buffering degrading under
-      heavily-contended co-resident JVMs; re-measured in a clean window
-      the two are within noise there (see BENCH/BASELINE.md).
+    """Arrow-native parse stage for a spec with a flat regex: one scalar
+    Arrow UDF (``make_arrow_parse_udf``), zero pandas/object
+    materialization on decided rows. ONLY the line column crosses into
+    Python and only the parsed struct returns; every passthrough column
+    (ids, page dims) stays JVM-side — the transfer/compute split of
+    *Accelerating Python UDFs in Vectorized Query Execution* (CIDR 2022).
+    A whole-batch ``mapInArrow`` variant, which ships every passthrough
+    column through Python, measured slower and was removed.
 
     ``drop_cols`` (e.g. ``["raw_line"]`` when nothing downstream reads
-    the raw text) trims the return stream — at 10^12 rows the raw-line
-    bytes dominate transfer. Requires a fast-safe spec
-    (``to_fast_regex() is not None``)."""
-    import os
+    the raw text) drops those columns from the output. Raises
+    ``ValueError`` for a spec without a flat regex; ``parse_lines``
+    routes those to the nested tier."""
+    from pyspark.sql import functions as F
 
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    rx, unset_suffix = _fast_plan(spec)
-    if rx is None:
+    udf = make_arrow_parse_udf(spec, byte_mode=byte_mode)
+    if udf is None:
         raise ValueError(
             f"spec {spec.name!r} has no flat fast regex; use parse_lines"
         )
-
-    if strategy is None:
-        strategy = os.environ.get("SPARK_GRAFT_PARSE_STRATEGY", "arrowudf")
-    if strategy == "arrowudf":
-        udf = make_arrow_parse_udf(spec, byte_mode=byte_mode)
-        if udf is not None:
-            from pyspark.sql import functions as F
-
-            out = df.withColumn(out_col, udf(F.col(line_col)))
-            drop = [c for c in (drop_cols or ()) if c in df.columns]
-            return out.drop(*drop) if drop else out
-        # no arrow_udf on this runtime -> fall through to mapInArrow
-
-    drop = set(drop_cols or ())
-    kept = [f for f in df.schema.fields if f.name not in drop]
-    out_schema = T.StructType(
-        kept + [T.StructField(out_col, spec.spark_schema(), False)]
-    )
-    names = spec.column_names() + ["well_formed"]
-
-    def fn(batches):
-        for batch in batches:
-            arr = batch.column(line_col)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            if not pa.types.is_string(arr.type):
-                arr = arr.cast(pa.string())
-            outs, wf = _batch_parse_arrow(
-                arr, spec, rx, unset_suffix, byte_mode=byte_mode
-            )
-            struct = pa.StructArray.from_arrays(outs + [wf], names=names)
-            if drop:
-                keep_idx = [
-                    i for i, name in enumerate(batch.schema.names)
-                    if name not in drop
-                ]
-                batch = batch.select(keep_idx)
-            yield batch.append_column(out_col, struct)
-
-    return df.mapInArrow(fn, out_schema)
+    out = df.withColumn(out_col, udf(F.col(line_col)))
+    drop = [c for c in (drop_cols or ()) if c in df.columns]
+    return out.drop(*drop) if drop else out
 
 
 def render_parsed(df, spec: FormatSpec, parsed_col: str = "parsed",
@@ -898,11 +761,8 @@ def parse_lines_multi(
 
     def fn(batches):
         for batch in batches:
+            # both kernels normalise large_string / sliced input themselves
             arr = batch.column(line_col)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            if not pa.types.is_string(arr.type):
-                arr = arr.cast(pa.string())
             n = len(arr)
             remaining = np.ones(n, dtype=bool)
             matched = np.full(n, None, dtype=object)
@@ -972,140 +832,3 @@ def _arrow_types(spec: FormatSpec):
         FieldType.DATE: pa.date32(),
     }
     return [m[f.ftype] for _, f in spec.output_fields()]
-
-
-def parse_lines_hybrid(
-    df,
-    spec: FormatSpec,
-    line_col: str = "raw_line",
-    out_col: str = "parsed",
-    drop_cols: Optional[Iterable[str]] = None,
-):
-    """Alternative strategy: JVM-codegen fast path + Python residual, in
-    ONE scan. NOT the default — measured slower than the Arrow kernel on
-    this hardware; see the trade-off note below.
-
-    The flat regex is Java-compatible (greedy, backtracking leftmost-
-    greedy — the same preference order the soundness proof covers), so
-    matched rows are extracted entirely JVM-side with whole-stage codegen
-    in TWO regex executions total: one ``rlike`` gate and one
-    ``regexp_replace`` that packs every capture group into a
-    separator-joined string (per-group ``regexp_extract`` would re-run
-    the full match k times). Rows the flat pattern rejects still need
-    walker semantics: the mapInArrow kernel runs over a column that is
-    NULL for matched rows — null strings cross the Arrow boundary for
-    ~free — so Python cost is proportional to the residual only.
-
-    Trade-off (measured, local[32], identical checksums): mapInArrow
-    2.17M rows/s vs hybrid 1.69M — java.util.regex backtracking runs
-    ~0.5M matches/s/core on this pattern while RE2 inside pyarrow does
-    ~0.9-1M, so eliminating the Arrow transfer does not pay for the
-    slower JVM engine here. The hybrid wins where Python workers are
-    scarce or rows are fat (transfer-bound) — hence kept as an opt-in
-    strategy with full parity coverage.
-    """
-    from pyspark.sql import functions as F
-
-    rx, unset_suffix = _fast_plan(spec)
-    if rx is None:
-        return parse_lines(df, spec, line_col=line_col, out_col=out_col)
-    jrx = rx.replace("(?P<", "(?<")
-
-    out_fields = spec.output_fields()
-    cols = spec.column_names()
-    # single-match multi-group extraction: ONE regexp_replace with
-    # backreferences packs every group into a \x01-separated string
-    # (k regexp_extract calls would run k full regex matches per row).
-    # Rows containing the separator byte are routed to the walker.
-    sep = "\u0001"
-    repl = sep.join(f"${k + 1}" for k in range(len(out_fields)))
-    matched = (
-        F.col(line_col).isNotNull()
-        & ~F.col(line_col).contains(sep)
-        & F.col(line_col).rlike(jrx)
-    )
-    if any(f.ftype == FieldType.INT for _, f in out_fields):
-        # int64 saturation contract: a 19+-digit run anywhere routes the
-        # row to the walker residual — the JVM cast("long") would
-        # silently NULL an overflowing capture with well_formed=true.
-        matched = matched & ~F.col(line_col).rlike("[0-9]{19}")
-    if any(f.ftype == FieldType.DATE for _, f in out_fields):
-        # DATE calendar contract: any shape-valid but calendar-invalid
-        # date (incl. year 0000, which Java's proleptic ISO chronology
-        # would accept but datetime.date rejects) routes the row to the
-        # walker residual, which declares it malformed. Same validity
-        # rules as functions.dates.is_valid_date, as Catalyst exprs.
-        def _date_invalid(s):
-            y = F.substring(s, 1, 4).cast("int")
-            m = F.substring(s, 6, 2).cast("int")
-            d = F.substring(s, 9, 2).cast("int")
-            leap = (y % 4 == 0) & ((y % 100 != 0) | (y % 400 == 0))
-            base = F.element_at(
-                F.array(*[F.lit(x) for x in
-                          (31, 28, 31, 30, 31, 30,
-                           31, 31, 30, 31, 30, 31)]), m
-            )
-            dim = base + F.when((m == 2) & leap, 1).otherwise(0)
-            return F.when(
-                (y < 1) | (m < 1) | (m > 12), F.lit(True)
-            ).otherwise((d < 1) | (d > dim))
-
-        matched = matched & ~F.exists(
-            F.regexp_extract_all(
-                F.col(line_col),
-                F.lit(r"([0-9]{4}-[0-9]{2}-[0-9]{2})"), F.lit(1),
-            ),
-            _date_invalid,
-        )
-    residual_col = "__residual"
-    packed_col = "__packed"
-    with_res = df.withColumn(
-        residual_col,
-        F.when(matched, F.lit(None)).otherwise(F.col(line_col)),
-    ).withColumn(
-        packed_col,
-        F.when(
-            matched,
-            F.split(F.regexp_replace(F.col(line_col), jrx, repl), sep),
-        ),
-    )
-    # the packed array must survive the kernel; the raw line need not
-    kernel = parse_lines_arrow(
-        with_res, spec, line_col=residual_col, out_col="__py_parsed",
-        drop_cols=[residual_col] + list(drop_cols or []),
-    )
-
-    raw_g = {
-        k: F.element_at(F.col(packed_col), k + 1)
-        for k in range(len(out_fields))
-    }
-    # trailing zero-width captures: '' at EOL means UNSET (None) — the
-    # same tail-zero chain the Arrow kernel applies, as Catalyst exprs
-    unset: dict[int, object] = {}
-    tail = F.lit(True)
-    for k in unset_suffix:  # last-to-first
-        tail = tail & (F.length(raw_g[k]) == 0)
-        unset[k] = tail
-    jvm_fields = []
-    for k, (i, f) in enumerate(out_fields):
-        g = raw_g[k]
-        if k in unset:
-            g = F.when(unset[k], F.lit(None)).otherwise(g)
-        if f.ftype == FieldType.INT:
-            g = g.cast("long")
-        elif f.ftype == FieldType.DBL:
-            g = g.cast("double")
-        elif f.ftype == FieldType.DATE:
-            # calendar-invalid rows were routed to the residual above,
-            # so this conversion never nulls a matched row
-            g = F.to_date(g, "yyyy-MM-dd")
-        jvm_fields.append(g.alias(cols[k]))
-    jvm_struct = F.struct(*jvm_fields, F.lit(True).alias("well_formed"))
-
-    combined = kernel.withColumn(
-        out_col,
-        F.when(F.col(packed_col).isNotNull(), jvm_struct).otherwise(
-            F.col("__py_parsed")
-        ),
-    ).drop("__py_parsed", packed_col)
-    return combined

@@ -105,6 +105,19 @@ def _complement(member: np.ndarray) -> np.ndarray:
     return np.setdiff1d(all_bytes, member)
 
 
+def as_string_array(lines) -> pa.Array:
+    """One contiguous ``string`` array. The kernels read Arrow offsets as
+    int32, so ``large_string`` input (Spark's
+    ``spark.sql.execution.arrow.useLargeVarTypes``) and chunked input are
+    normalised here, once per batch; ``string`` input passes through
+    untouched (zero-copy, slice offset kept)."""
+    if isinstance(lines, pa.ChunkedArray):
+        lines = lines.combine_chunks()
+    if not pa.types.is_string(lines.type):
+        lines = lines.cast(pa.string())
+    return lines
+
+
 def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
                      byte_mode: bool = False):
     """Walk an Arrow string batch. Returns (outs, wf): one pa.Array per
@@ -118,6 +131,7 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
     lands mid-codepoint (they need the U+FFFD replacement contract of
     ``oracle.parse_line_bytes``). In the default codepoint mode,
     multi-byte rows bail to the codepoint oracle as before."""
+    lines = as_string_array(lines)
     n_rows = len(lines)
     out_fields = spec.output_fields()
     out_idx = {i: k for k, (i, _) in enumerate(out_fields)}
@@ -125,8 +139,6 @@ def batch_walk_arrow(lines: pa.Array, spec: FormatSpec,
     # zero-copy: walk the Arrow string array's own offset/data buffers.
     # UTF-8 multi-byte rows bail to the oracle (their NCHAR counts are
     # codepoint-based in the oracle contract, byte-based here).
-    if isinstance(lines, pa.ChunkedArray):
-        lines = lines.combine_chunks()
     arr_off = lines.offset
     offsets = np.frombuffer(lines.buffers()[1], dtype=np.int32)[
         arr_off : arr_off + n_rows + 1

@@ -147,13 +147,10 @@ class TestSparkByteMode:
         ]
         return spark.createDataFrame(lines, "doc_id LONG, raw_line STRING")
 
-    @pytest.mark.parametrize("strategy", ["mapinarrow", "arrowudf"])
-    def test_kernel_matches_byte_oracle(self, spark, unicode_df, strategy):
+    def test_kernel_matches_byte_oracle(self, spark, unicode_df):
         from logparser_spark.operators.parse import parse_lines_arrow
 
-        parsed = parse_lines_arrow(
-            unicode_df, NCHAR_SPEC, strategy=strategy, byte_mode=True
-        )
+        parsed = parse_lines_arrow(unicode_df, NCHAR_SPEC, byte_mode=True)
         rows = {r["doc_id"]: r["parsed"] for r in parsed.collect()}
         for r in unicode_df.collect():
             evals, ewf = parse_line_bytes(r["raw_line"], NCHAR_SPEC)

@@ -78,10 +78,10 @@ def test_oracle_date_semantics():
     ) == ([42, datetime.date(2020, 5, 6)], True)
 
 
-@pytest.mark.parametrize(
-    "strategy", ["mapinarrow", "arrowudf", "pandas", "hybrid"]
-)
+@pytest.mark.parametrize("strategy", ["arrowudf", "pandas"])
 def test_all_spark_strategies_match_oracle(spark, strategy):
+    """The Arrow kernel (``arrowudf``, the path ``parse_lines`` takes for
+    this spec) and the nested tier (``pandas``) both match the oracle."""
     from pyspark.sql import functions as F
 
     from logparser_spark.operators import parse as P
@@ -94,10 +94,8 @@ def test_all_spark_strategies_match_oracle(spark, strategy):
         out = df.withColumn(
             "parsed", P.make_parse_udf(spec)(F.col("raw_line"))
         )
-    elif strategy == "hybrid":
-        out = P.parse_lines_hybrid(df, spec)
     else:
-        out = P.parse_lines_arrow(df, spec, strategy=strategy)
+        out = P.parse_lines_arrow(df, spec)
     for r in out.collect():
         vals, wf = want[r["raw_line"]]
         p = r["parsed"]
@@ -121,7 +119,7 @@ def test_multi_format_cascade_and_render(spark):
         assert (rows[l]["matched_format"] == "datefmt") == wf or not wf
 
     rend = P.render_parsed(
-        P.parse_lines_arrow(df, spec, strategy="mapinarrow"), spec
+        P.parse_lines_arrow(df, spec), spec
     )
     got = {r["raw_line"]: r["rendered"] for r in rend.collect()}
     assert got["2024-02-29 1200 INFO :hello world"] == (
@@ -133,7 +131,6 @@ def test_multi_format_cascade_and_render(spark):
     r2 = P.render_parsed(
         P.parse_lines_arrow(
             spark.createDataFrame([("7 x",)], "raw_line string"), nod,
-            strategy="mapinarrow",
         ), nod,
     ).collect()[0]["rendered"]
     assert r2 == 'ParsedLine: ints(7); dbls(); chrs(); strs("x")'
@@ -152,7 +149,7 @@ def test_date_filters(spark):
          ("2023-01-01 1 INFO :c",)],
         "raw_line string",
     )
-    parsed = P.parse_lines_arrow(df, spec, strategy="mapinarrow")
+    parsed = P.parse_lines_arrow(df, spec)
     kept = sorted(
         r["raw_line"][:10]
         for r in parsed.where(to_column(flt, spec)).collect()

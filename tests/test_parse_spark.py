@@ -106,7 +106,6 @@ class TestParseMatchesOracle:
         """int64 saturation contract (C strtol): >=19-digit runs must not
         crash any tier and must clamp to INT64_MAX, well_formed=true."""
         from logparser_spark.functions.oracle import INT64_MAX
-        from logparser_spark.operators.parse import parse_lines_hybrid
 
         lines = [
             "99999999999999999999999 85400 ERROR :.host1: boom",
@@ -119,15 +118,6 @@ class TestParseMatchesOracle:
         got = _spark_parse(spark, lines, SPEC)
         assert got[0]["well_formed"] and got[0][SPEC.column_names()[0]] == INT64_MAX
         assert got[2][SPEC.column_names()[0]] == INT64_MAX
-
-        # hybrid path: same rows, same results (no silent NULLs)
-        df = _to_rows(spark, lines)
-        hyb = {
-            r["line_no"]: r["parsed"]
-            for r in parse_lines_hybrid(df, SPEC, line_col="raw_line").collect()
-        }
-        for i in range(len(lines)):
-            assert hyb[i] == got[i], (i, lines[i], hyb[i], got[i])
 
     def test_int_overflow_pandas_tier(self, spark):
         """The pandas-UDF path (make_parse_udf) under the same contract."""
@@ -358,28 +348,3 @@ class TestParseMulti:
         }
         assert counts == {"default": 58, "hexdump": 4}
 
-
-def test_hybrid_parse_parity(spark):
-    """parse_lines_hybrid (JVM packed-extract + walker residual) must be
-    row-identical to the default Arrow path on corpus + malformed +
-    quirk lines."""
-    from pyspark.sql import functions as F
-
-    from logparser_spark.operators.parse import (
-        parse_lines,
-        parse_lines_hybrid,
-    )
-
-    spec = compile_format(DEFAULT_FORMAT)
-    lines = list(GOLDEN_LINES) + [
-        "", "0322", "0322 085338 TRACE  :", "-5 1 X :.a: b",
-        " 7 2 L :.s: m",
-    ]
-    df = spark.createDataFrame(
-        [(i, l) for i, l in enumerate(lines)], "rid LONG, raw_line STRING"
-    )
-    a = {r["rid"]: r["parsed"] for r in parse_lines(df, spec).collect()}
-    b = {r["rid"]: r["parsed"] for r in parse_lines_hybrid(df, spec).collect()}
-    assert set(a) == set(b)
-    for rid in a:
-        assert a[rid] == b[rid], (rid, lines[rid], a[rid], b[rid])
